@@ -176,7 +176,7 @@ def compact_line(timings: dict[str, float], total: float, sf: float,
         return line
     # Positional stages: values only, sorted-full-name order, warm
     # slimmed to its two scalars. First with sub-second values at
-    # 1 decimal (ints ≥1s); if that still overflows, floor everything
+    # 1 decimal (ints ≥1s); if that still overflows, round everything
     # to whole seconds — every entry stays present either way.
     key = {"queries_key": "sorted-name-positional"}
     for vals in (

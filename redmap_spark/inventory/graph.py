@@ -18,8 +18,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
-from redmap_spark.inventory._nodekeys import enc_cust, enc_supp, node_str
+from redmap_spark.inventory._nodekeys import (
+    cust_supp_edges,
+    enc_cust,
+    enc_supp,
+    node_str,
+    undirected,
+)
 from redmap_spark.inventory.registry import query
+from redmap_spark.plans.partitioning import leaf_bytes
 
 TRI_SQL = """
 WITH li AS (
@@ -123,25 +130,11 @@ SELECT CAST(3 AS BIGINT), CAST((SELECT COUNT(*) FROM k3) AS BIGINT),
 
 @query("mr_kcore", oracle=MRKCORE_SQL)
 def mr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    orders = c.orders
-    e0 = (
-        orders.join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            orders.o_orderkey == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        # BIGINT vertices throughout (cust=2k, supp=2k+1, _nodekeys):
-        # the output is round/node/edge COUNTS, so no decode is ever
-        # needed and every degree groupBy and keep-join hashes ints.
-        .select(enc_cust(F.col("o_custkey")), enc_supp(F.col("l_suppkey")))
-        # materialize the expensive fact-join edge build ONCE — the
-        # symmetrizing union consumes it twice
-        .localCheckpoint(eager=True)
-    )
+    # BIGINT vertices throughout (cust=2k, supp=2k+1, _nodekeys): the
+    # output is round/node/edge COUNTS, so no decode is ever needed and
+    # every degree groupBy and keep-join hashes ints.
     edges = (
-        e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        undirected(cust_supp_edges(Catalog(spark, sf_dir)))
         # pinned hash-partitioned on SRC: the per-round degree groupBy
         # reuses it exchange-free, and the broadcast keep-joins +
         # select + re-checkpoint preserve it across rounds
@@ -413,24 +406,12 @@ ORDER BY round
 
 @query("mr_label_propagation", oracle=LABELPROP_SQL)
 def mr_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    orders = c.orders
-    e0 = (
-        orders.join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            orders.o_orderkey == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        # BIGINT vertex keys (cust=2k, supp=2k+1, _nodekeys); labels
-        # stay 'c…'/'s…' STRINGS because the oracle's vote tie-break
-        # (count DESC, label ASC) is stated in string space — the
-        # string is payload, the shuffle/join keys are ints.
-        .select(enc_cust(F.col("o_custkey")), enc_supp(F.col("l_suppkey")))
-        .localCheckpoint(eager=True)
-    )
+    # BIGINT vertex keys (cust=2k, supp=2k+1, _nodekeys); labels stay
+    # 'c…'/'s…' STRINGS because the oracle's vote tie-break (count
+    # DESC, label ASC) is stated in string space — the string is
+    # payload, the shuffle/join keys are ints.
     edges = (
-        e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        undirected(cust_supp_edges(Catalog(spark, sf_dir)))
         # partition on the probe key ONCE: each round's labels join
         # reuses this partitioning (only the label table reshuffles)
         .repartition("dst")
@@ -674,15 +655,11 @@ ORDER BY role, rank
 @query("mr_hits", oracle=HITS_SQL)
 def mr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
-    orders = cat.orders
-    e = (
-        orders.join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            orders.o_orderkey == F.col("l_orderkey"),
-        )
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .localCheckpoint(eager=True)  # four half-step joins consume
+    # c/s are the encoded node ids (2·custkey, 2·suppkey+1): both maps
+    # are monotone, so the (score DESC, key) tie-breaks are unchanged
+    # and the output decodes the raw key as id >> 1.
+    e = cust_supp_edges(cat).select(
+        F.col("src").alias("c"), F.col("dst").alias("s")
     )
 
     def norm(df, key, raw_double):
@@ -708,12 +685,12 @@ def mr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaf bytes (ADVICE r11): past ~64 MB of raw customer parquet the
     # two-column score projection approaches real broadcast-memory
     # cost and the hint is dropped — AQE/SMJ then picks the strategy.
+    # No byte evidence (non-local URI, unreadable file): don't force it.
     try:
-        import os as _os
-
-        _hub_fits = _os.path.getsize(cat.path("customer")) <= 64 * 1024 * 1024
-    except OSError:  # non-local URI: no byte evidence, don't force it
-        _hub_fits = False
+        hub_bytes = leaf_bytes(cat.customer.inputFiles())
+    except OSError:
+        hub_bytes = None
+    _hub_fits = hub_bytes is not None and hub_bytes <= 64 * 1024 * 1024
     for half in ("h1", "a2", "h2"):
         if half.startswith("h"):
             r = (
@@ -742,7 +719,7 @@ def mr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     topa = (
         a.select(
             F.lit("authority").alias("role"),
-            F.col("s").cast("bigint").alias("node"),
+            F.shiftright("s", 1).alias("node"),
             F.round(F.col("score").cast("double"), 6).alias("sc"),
             F.row_number().over(wa).alias("rank"),
         )
@@ -751,7 +728,7 @@ def mr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     toph = (
         h.select(
             F.lit("hub").alias("role"),
-            F.col("c").cast("bigint").alias("node"),
+            F.shiftright("c", 1).alias("node"),
             F.round(F.col("score").cast("double"), 6).alias("sc"),
             F.row_number().over(wh).alias("rank"),
         )
@@ -1187,23 +1164,19 @@ ORDER BY per.n_name
 @query("mr_modularity", oracle=MODULARITY_SQL)
 def mr_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
-    e = (
-        cat.orders.select("o_orderkey", "o_custkey")
-        .join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
     en = (
-        e.join(
-            F.broadcast(cat.customer.select("c_custkey", "c_nationkey")),
-            F.col("c_custkey") == F.col("o_custkey"),
+        cust_supp_edges(cat)
+        .join(
+            F.broadcast(
+                cat.customer.select(enc_cust(F.col("c_custkey")), "c_nationkey")
+            ),
+            "src",
         )
         .join(
-            F.broadcast(cat.supplier.select("s_suppkey", "s_nationkey")),
-            F.col("s_suppkey") == F.col("l_suppkey"),
+            F.broadcast(
+                cat.supplier.select(enc_supp(F.col("s_suppkey")), "s_nationkey")
+            ),
+            "dst",
         )
         .select(F.col("c_nationkey").alias("cn"), F.col("s_nationkey").alias("sn"))
     )
@@ -1320,22 +1293,11 @@ ORDER BY rank LIMIT 15
 
 @query("mr_ppr", oracle=PPR_SQL)
 def mr_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    e0 = (
-        c.orders.join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        # BIGINT vertices (cust=2k, supp=2k+1, _nodekeys): every
-        # round's contribution join/groupBy hashes ints; the oracle's
-        # string-space tie-breaks (seed pick, final rank) decode via
-        # node_str exactly where the ordering happens.
-        .select(enc_cust(F.col("o_custkey")), enc_supp(F.col("l_suppkey")))
-        .distinct()
-    )
-    edges = e0.unionAll(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    # BIGINT vertices (cust=2k, supp=2k+1, _nodekeys): every round's
+    # contribution join/groupBy hashes ints; the oracle's string-space
+    # tie-breaks (seed pick, final rank) decode via node_str exactly
+    # where the ordering happens.
+    edges = undirected(cust_supp_edges(Catalog(spark, sf_dir)))
     # reused every round; pinned hash-partitioned on DST so each
     # round's contribution groupBy(dst) reuses the partitioning
     # (the rank/degree joins broadcast and preserve it)
@@ -1467,29 +1429,16 @@ SELECT * FROM (
 
 @query("mr_matching", oracle=_matching_sql())
 def mr_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    e = (
-        cat.orders.join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        # BIGINT endpoint keys (cust=2k, supp=2k+1, _nodekeys) carry
-        # every per-vertex MIN groupBy and both anti-joins; the edge
-        # key ek stays the oracle's 'c…>s…' STRING because MIN-over-ek
-        # semantics are stated in ASCII order — it rides as payload
-        # only, derived once here.
-        .select(
-            enc_cust(F.col("o_custkey")).alias("c"),
-            enc_supp(F.col("l_suppkey")).alias("s"),
-            F.concat(
-                F.lit("c"), F.col("o_custkey").cast("string"),
-                F.lit(">s"), F.col("l_suppkey").cast("string"),
-            ).alias("ek"),
-        )
+    # BIGINT endpoint keys (cust=2k, supp=2k+1, _nodekeys) carry every
+    # per-vertex MIN groupBy and both anti-joins; the edge key ek stays
+    # the oracle's 'c…>s…' STRING because MIN-over-ek semantics are
+    # stated in ASCII order — it rides as payload only.
+    e = cust_supp_edges(Catalog(spark, sf_dir)).select(
+        F.col("src").alias("c"),
+        F.col("dst").alias("s"),
+        F.concat(node_str(F.col("src")), F.lit(">"), node_str(F.col("dst")))
+        .alias("ek"),
     )
-    e = e.localCheckpoint()
     out = []
     for rnd in range(1, 4):
         vm = (

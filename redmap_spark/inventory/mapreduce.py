@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
-from redmap_spark.inventory._nodekeys import enc_cust, enc_supp, node_str
+from redmap_spark.inventory._nodekeys import cust_supp_edges, node_str, undirected
 from redmap_spark.inventory.registry import dec, query
 
 # -- mr_map: per-record transform --------------------------------------
@@ -269,28 +269,11 @@ SELECT node, round(r, 9) AS rank FROM r3
 
 @query("mr_pagerank", oracle=MR_PAGERANK_SQL)
 def mr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    orders = c.orders
     # Vertices ride every round as BIGINT (cust=2k, supp=2k+1, see
     # _nodekeys): the per-round contribution shuffle and degree joins
     # hash ints, not varchars; 'c…'/'s…' names appear only in the
     # final display projection. Rank values are encoding-invariant.
-    e0 = (
-        orders.join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            orders.o_orderkey == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .select(enc_cust(F.col("o_custkey")), enc_supp(F.col("l_suppkey")))
-        # materialize the fact-join edge build ONCE (r12): deg's
-        # aggregation and the w_edges join both consume `edges`, and
-        # without this checkpoint each ran the orders⋈lineitem
-        # distinct from scratch — two fact builds per entry (the rest
-        # of the family already pins e0; mr_pagerank had missed it)
-        .localCheckpoint(eager=True)
-    )
-    edges = e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = undirected(cust_supp_edges(Catalog(spark, sf_dir)))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).cache()
     # the node set IS deg's key column (the graph is symmetrized, so
     # every node has out-edges) — deriving it from deg reuses that
@@ -477,26 +460,13 @@ SELECT node, lbl AS component FROM l3
 
 @query("mr_connected_components", oracle=MRCC_SQL)
 def mr_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    orders = c.orders
     # Vertex join/groupBy keys are BIGINT (cust=2k, supp=2k+1, see
     # _nodekeys); the LABEL stays the oracle's 'c…'/'s…' string,
     # because min-label semantics are stated in string space and the
     # propagated label is the output — the string rides as payload,
     # never as a shuffle key.
-    e0 = (
-        orders.join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            orders.o_orderkey == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .select(enc_cust(F.col("o_custkey")), enc_supp(F.col("l_suppkey")))
-    )
     edges = (
-        e0.union(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        undirected(cust_supp_edges(Catalog(spark, sf_dir)))
         # pinned hash-partitioned on DST: the per-round broadcast-join
         # preserves it, so every groupBy(dst) runs exchange-free
         .repartition("dst")
@@ -584,22 +554,11 @@ SELECT node, CAST(dist AS BIGINT) AS dist FROM d3
 
 @query("mr_bfs", oracle=MRBFS_SQL)
 def mr_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    orders = c.orders
     # BIGINT vertices (cust=2k, supp=2k+1, see _nodekeys): the
     # per-round frontier broadcast-join and min-dist groupBy hash
     # ints; distances are encoding-invariant, names decode at the end.
-    e0 = (
-        orders.join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            orders.o_orderkey == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .select(enc_cust(F.col("o_custkey")), enc_supp(F.col("l_suppkey")))
-    )
     edges = (
-        e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        undirected(cust_supp_edges(Catalog(spark, sf_dir)))
         # pinned hash-partitioned on DST: the per-round broadcast-join
         # preserves it, so the expansion's min-dist groupBy(dst) runs
         # exchange-free; only the tiny |frontier|-row merge shuffles

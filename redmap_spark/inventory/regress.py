@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
-from redmap_spark.inventory._nodekeys import enc_cust, enc_supp
+from redmap_spark.inventory._nodekeys import cust_supp_edges
 from redmap_spark.inventory.registry import dec, query, spread
 
 
@@ -1533,26 +1533,14 @@ ORDER BY rk
 
 @query("mr_betweenness", oracle=MRBETW_SQL)
 def mr_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
     # Nodes ride through the BFS as BIGINT (cust=2k, supp=2k+1): int
-    # hash-joins beat varchar, and the distinct runs on the raw int
-    # pair before any string is built. The graph is bipartite and the
-    # traversal ALTERNATES sides, so each BFS/accumulation step needs
-    # exactly ONE edge direction — checkpoint only the |E| directed
-    # pairs once and pick the orientation per step, instead of
-    # materializing (and re-scanning, 4x) a doubled src/dst table.
-    pair = (
-        c.orders.select("o_orderkey", "o_custkey")
-        .join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            (F.col("o_custkey") * 2).alias("cn"),
-            (F.col("l_suppkey") * 2 + 1).alias("sn"),
-        )
-        .distinct()
-        .localCheckpoint()
+    # hash-joins beat varchar. The graph is bipartite and the traversal
+    # ALTERNATES sides, so each BFS/accumulation step needs exactly ONE
+    # edge direction — read the |E| checkpointed directed pairs and
+    # pick the orientation per step, instead of materializing (and
+    # re-scanning, 4x) a doubled src/dst table.
+    pair = cust_supp_edges(Catalog(spark, sf_dir)).select(
+        F.col("src").alias("cn"), F.col("dst").alias("sn")
     )
 
     def edges_from(side: str) -> DataFrame:
@@ -1757,19 +1745,9 @@ ORDER BY degree_threshold
 
 @query("mr_rich_club", oracle=RICHCLUB_SQL)
 def mr_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    e0 = (
-        cat.orders.join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        # BIGINT vertices (cust=2k, supp=2k+1, _nodekeys): output is
-        # per-threshold counts, side derives from key parity.
-        .select(enc_cust(F.col("o_custkey")), enc_supp(F.col("l_suppkey")))
-        .localCheckpoint()
-    )
+    # BIGINT vertices (cust=2k, supp=2k+1, _nodekeys): output is
+    # per-threshold counts, side derives from key parity.
+    e0 = cust_supp_edges(Catalog(spark, sf_dir))
     deg = (
         e0.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("c"))

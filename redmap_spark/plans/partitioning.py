@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame
 
 # Logical-plan nodes that imply the input's width was already set by
@@ -24,6 +27,20 @@ _POST_SHUFFLE_NODES = (
     "Deduplicate",
     "Sort",
 )
+
+
+def leaf_bytes(files: list[str]) -> int | None:
+    """Summed on-disk bytes of a plan's leaf files (``df.inputFiles()``),
+    so a directory dataset reports the sum of its part files, not the
+    directory inode. ``None`` when any input is a non-local URI (it
+    cannot be stat-ed here: no byte evidence); a local file that
+    cannot be stat-ed raises ``OSError``."""
+    total = 0
+    for f in files:
+        if not f.startswith("file:"):
+            return None
+        total += os.path.getsize(unquote(urlparse(f).path))
+    return total
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -81,20 +98,10 @@ def spread(df: DataFrame) -> DataFrame:
     # may be a single large splittable parquet, so skip the heal
     # entirely — a perf-only conservative miss beats adding the
     # data-sized shuffle the byte gate exists to prevent.
-    size_bytes = 0
-    for f in files:
-        if f.startswith("file:"):
-            try:
-                from urllib.parse import unquote, urlparse
-
-                size_bytes += __import__("os").path.getsize(
-                    unquote(urlparse(f).path)
-                )
-            except OSError:
-                return df
-        else:
-            size_bytes = 0
-            break
+    try:
+        size_bytes = leaf_bytes(files) or 0
+    except OSError:
+        return df
     try:
         split_bytes = int(
             spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()

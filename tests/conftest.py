@@ -22,6 +22,25 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMALL = "/root/testdata/sf0.001"
 
 
+def default_run_oracles() -> list[str]:
+    """Oracle entries the default (non-slow) run checks: the current
+    verification window — the first 50 oracle entries in queries()
+    order, the set the next CORRECTNESS check hash-verifies — followed
+    by the entries of the newest CORRECTNESS_r<NN>.json, so a window
+    rotation keeps the just-verified entries under default-run
+    coverage until the next artifact replaces them."""
+    import json
+
+    from redmap_spark.inventory import ORACLES, QUERIES
+
+    names = [n for n in QUERIES if n in ORACLES][:50]
+    artifacts = sorted(REPO.glob("CORRECTNESS_r[0-9][0-9].json"))
+    if artifacts:
+        latest = json.loads(artifacts[-1].read_text())
+        names += [n for n in latest if n in ORACLES and n not in names]
+    return names
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("redmap-spark-tests", shuffle_partitions=8)

@@ -1014,3 +1014,19 @@ def test_spread_skips_heal_when_leaf_stat_fails(spark, tmp_path, monkeypatch):
         assert spread(narrow) is narrow
     finally:
         monkeypatch.setattr(_os.path, "getsize", real_getsize)
+
+
+def test_leaf_bytes_sums_directory_parts(spark, tmp_path):
+    """A multi-file parquet dataset is a directory whose inode size
+    says nothing about its data: the byte evidence behind spread()'s
+    heal gate and mr_hits' hub-broadcast gate is the sum of the part
+    files df.inputFiles() lists."""
+    from redmap_spark.plans.partitioning import leaf_bytes
+
+    out = tmp_path / "two_parts.parquet"
+    spark.range(0, 1000, numPartitions=2).write.parquet(str(out))
+    parts = sorted(out.glob("part-*.parquet"))
+    assert len(parts) == 2, parts
+    assert leaf_bytes(spark.read.parquet(str(out)).inputFiles()) == sum(
+        p.stat().st_size for p in parts
+    )

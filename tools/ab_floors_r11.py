@@ -39,6 +39,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from redmap_spark.catalog import Catalog  # noqa: E402
 from redmap_spark.inventory import QUERIES  # noqa: E402
+from redmap_spark.inventory._nodekeys import cust_supp_edges  # noqa: E402
 from redmap_spark.session import get_spark  # noqa: E402
 
 
@@ -139,19 +140,8 @@ def als_B(spark: SparkSession, sf_dir: str) -> DataFrame:
 def betw_B(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mr_betweenness with groupBy+broadcast sigma_w instead of the
     |paths|-row window shuffle in the dependency accumulation."""
-    c = Catalog(spark, sf_dir)
-    pair = (
-        c.orders.select("o_orderkey", "o_custkey")
-        .join(
-            c.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            (F.col("o_custkey") * 2).alias("cn"),
-            (F.col("l_suppkey") * 2 + 1).alias("sn"),
-        )
-        .distinct()
-        .localCheckpoint()
+    pair = cust_supp_edges(Catalog(spark, sf_dir)).select(
+        F.col("src").alias("cn"), F.col("dst").alias("sn")
     )
 
     def edges_from(side: str) -> DataFrame:
